@@ -154,6 +154,10 @@ HEADLINE = [
 ]
 
 
+#: warn threshold for the final line's length (snapshot is 2000 chars)
+FINAL_LINE_WARN_CHARS = 1800
+
+
 def materialize(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
@@ -163,8 +167,9 @@ def short_key_map(names: list[str]) -> dict[str, str]:
     letter of each underscore-separated word; on collision, extend
     with successive letters of the LAST word, then a numeric suffix.
     Processing in sorted order makes the mapping a pure function of
-    the name set, so the committed ``short_keys`` table stays stable
-    round over round for unchanged names."""
+    the name SET — not of each name: a new name that sorts earlier can
+    claim a key an existing name held. Compare compact lines across
+    rounds only through each round's committed ``short_keys`` map."""
     out: dict[str, str] = {}
     used: set[str] = set()
     for name in sorted(names):
@@ -180,6 +185,37 @@ def short_key_map(names: list[str]) -> dict[str, str]:
         used.add(key)
         out[name] = key
     return out
+
+
+def final_line(full: dict, shorts: dict[str, str]) -> str:
+    """The FINAL stdout line (see module docstring): the COMPLETE
+    per-query surface of ``full`` under its short keys. It must stay
+    inside the 2000-char stdout snapshot it is parsed from, so a line
+    past ``FINAL_LINE_WARN_CHARS`` warns on stderr instead of being
+    rediscovered as ``parsed: null``."""
+    line = json.dumps(
+        {
+            "metric": full["metric"],
+            "value": full["value"],
+            "unit": "sec",
+            "sf": full["sf"],
+            "build_sec": round(full["flights_pipeline_build_sec"], 2),
+            "n_queries": len(full["queries"]),
+            "queries": {
+                shorts[n]: round(v, 2) for n, v in full["queries"].items()
+            },
+            "keymap": "BENCH_headline_latest.json short_keys",
+        },
+        separators=(",", ":"),
+    )
+    if len(line) > FINAL_LINE_WARN_CHARS:
+        print(
+            f"bench: final line is {len(line)} chars, over "
+            f"{FINAL_LINE_WARN_CHARS}; the 2000-char stdout snapshot may "
+            "cut it",
+            file=sys.stderr,
+        )
+    return line
 
 
 def main() -> None:
@@ -265,26 +301,7 @@ def main() -> None:
             f.write("\n")
     except OSError as exc:
         print(f"bench: could not write headline artifact: {exc}", file=sys.stderr)
-    # FINAL line = the driver-parsed summary (see module docstring):
-    # the COMPLETE per-query surface under deterministic short keys
-    # (~900 chars, inside the driver's 2000-char stdout snapshot).
-    print(
-        json.dumps(
-            {
-                "metric": metric,
-                "value": total,
-                "unit": "sec",
-                "sf": sf,
-                "build_sec": round(build_sec, 2),
-                "n_queries": len(timings),
-                "queries": {
-                    shorts[n]: round(v, 2) for n, v in timings.items()
-                },
-                "keymap": "BENCH_headline_latest.json short_keys",
-            },
-            separators=(",", ":"),
-        )
-    )
+    print(final_line(full, shorts))
 
 
 if __name__ == "__main__":

@@ -1176,11 +1176,16 @@ _BASKET_ITEMS_SQL = f"""items_all AS (
 
 
 def _basket_items(li: DataFrame) -> DataFrame:
-    """Distinct (basket, item) pairs with baskets over ``BASKET_CAP``
-    items removed — the bounded input every co-purchase self-join
-    starts from. One windowed count over the already-shuffled distinct
-    output; no extra join."""
-    items = li.select("l_orderkey", "l_partkey").dropDuplicates()
+    """Distinct (basket, item) rows of baskets within ``BASKET_CAP``
+    rows: ``_BASKET_ITEMS_SQL``'s shape, a NULL ``l_partkey`` counting
+    toward the cap as there. The explicit ``hashpartitioning(l_orderkey)``
+    satisfies the distinct, the window and any later per-basket
+    aggregate, so it is the only exchange."""
+    items = (
+        li.select("l_orderkey", "l_partkey")
+        .repartition("l_orderkey")
+        .dropDuplicates()
+    )
     return (
         items.withColumn(
             "bsz", F.count("*").over(W.partitionBy("l_orderkey"))
@@ -1191,30 +1196,17 @@ def _basket_items(li: DataFrame) -> DataFrame:
 
 
 def _basket_arrays(li: DataFrame) -> DataFrame:
-    """``(l_orderkey, arr)``: each capped basket's SORTED DISTINCT item
-    array. Round 12 built every basket's array in one ``collect_set``
-    pass and filtered ≤ ``BASKET_CAP`` afterwards — which meant a
-    pathological million-item basket allocated a million-element
-    aggregation buffer BEFORE the cap could drop it (round-12 VERDICT
-    "What's wrong #5"). Round 13 bounds the buffer: cap membership is
-    decided first from a two-level COUNT pass whose buffers are
-    constant-size (dedup at (basket, item) grain with map-side
-    partials, then a count per basket), and only in-cap baskets reach
-    ``collect_set`` — its array buffer is then ≤ cap by construction.
-    Same result set: the count pass computes exactly the distinct-item
-    count the old ``size(arr)`` filter read off the built array."""
-    items = li.select("l_orderkey", "l_partkey")
-    ok = (
-        items.distinct()
-        .groupBy("l_orderkey")
-        .agg(F.count("*").alias("n_items"))
-        .filter(F.col("n_items") <= BASKET_CAP)
-        .select("l_orderkey")
-    )
+    """``(l_orderkey, arr)``: each capped basket's sorted distinct
+    non-null items, built on ``_basket_items``'s single exchange. The
+    memory bound holds: the window buffer spills, and ``collect_list``
+    only sees baskets already within the cap. Dropping NULL items and
+    the NULL basket (the filter is pushed to the scan) matches the
+    oracles' pair join on ``l_orderkey =`` and ``l_partkey <``."""
     return (
-        items.join(ok, "l_orderkey", "left_semi")
+        _basket_items(li)
+        .filter(F.col("l_orderkey").isNotNull())
         .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("arr"))
+        .agg(F.sort_array(F.collect_list("l_partkey")).alias("arr"))
     )
 
 
@@ -1239,13 +1231,13 @@ def _basket_pair_counts(li: DataFrame) -> DataFrame:
     """``(pa, pb, w)``: ordered co-purchase pairs with their basket
     support, the shared kernel every co-purchase graph/rules query
     derives from. Pairs are expanded IN-ROW from each basket's sorted
-    distinct item array instead of the classic items-⋈-items self-join
-    — the same pair multiset per basket (all i < j combinations of the
-    distinct items), but two exchanges total instead of four
-    (dropDuplicates + window + join-key + pair-groupBy), no join, and
-    the pair aggregate gets map-side partials (guide: aggregate before
-    you shuffle). Per-basket fan-out is C(|basket|, 2), bounded by
-    ``BASKET_CAP`` exactly as the self-join was."""
+    distinct item array instead of the oracles' items-⋈-items
+    self-join — the same pair multiset per basket (all i < j
+    combinations of the distinct non-null items), but no join and two
+    exchanges in total: the ``l_orderkey`` one of ``_basket_arrays``
+    and the pair ``groupBy``, which gets map-side partials (guide:
+    aggregate before you shuffle). Per-basket fan-out is
+    C(|basket|, 2), bounded by ``BASKET_CAP``."""
     pairs = _basket_arrays(li).select(
         F.explode(_ordered_pairs(F.col("arr"))).alias("p")
     )

@@ -58,10 +58,30 @@ SLOW_TESTS = {
 
 
 def pytest_collection_modifyitems(config, items):
+    modules = {}
     for item in items:
         base = item.nodeid.rsplit("/", 1)[-1].split("[", 1)[0]
+        modules[base.split("::", 1)[0]] = getattr(item, "module", None)
         if base in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+    # a renamed or removed heavy test must not silently fall back into
+    # the default tier: every entry has to name a test that exists. A
+    # file outside this run is checked on disk only, so a partial run
+    # (one file, -k) still collects.
+    here = os.path.dirname(__file__)
+    stale = []
+    for entry in sorted(SLOW_TESTS):
+        fname, func = entry.split("::", 1)
+        if fname in modules:
+            found = hasattr(modules[fname], func)
+        else:
+            found = os.path.exists(os.path.join(here, fname))
+        if not found:
+            stale.append(entry)
+    if stale:
+        raise pytest.UsageError(
+            "SLOW_TESTS entries match no test: " + ", ".join(stale)
+        )
 
 
 @pytest.fixture(scope="session")
