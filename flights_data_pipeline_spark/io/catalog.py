@@ -32,11 +32,11 @@ SparkSession (e.g. the driver's own).
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
+
+from ..session import session_memo
 
 TESTDATA_TABLES = [
     "region",
@@ -53,23 +53,6 @@ TESTDATA_TABLES = [
 
 _NANOS_TS_COLS: dict[str, list[str]] = {"events": ["ts"]}
 
-#: memoized *logical plans* (DataFrame objects), keyed
-#: (applicationId, sf_dir, table). A DataFrame is an immutable plan —
-#: memoizing it reuses driver-side metadata (footer schema read, path
-#: validation, the read.parquet py4j round-trips, ~0.1 s per call, paid
-#: by EVERY query build), never rows: each action on the memoized plan
-#: re-scans the parquet from disk. This is the ``candidate_join
-#: _DECISIONS`` pattern (round-11), applied to the hottest plan-build
-#: chokepoint. Entries from other applicationIds are evicted on insert
-#: so cycling sessions never accumulate stale keys.
-_TABLE_PLANS: dict[tuple[str, str, str], DataFrame] = {}
-
-#: guards _TABLE_PLANS (round-12 ADVICE): the engine now runs driver
-#: ThreadPoolExecutors (pipeline fan-outs), and dict iterate-then-
-#: delete under concurrent insert raises RuntimeError. Contention at
-#: plan-build frequency is negligible.
-_TABLE_PLANS_LOCK = threading.Lock()
-
 
 def _pin_parquet_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
@@ -85,28 +68,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (``io.paths.s3a_conf``), not a code change."""
     from .paths import validate_path
 
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    with _TABLE_PLANS_LOCK:
-        hit = _TABLE_PLANS.get(key)
-    if hit is not None:
-        # re-pin on hits too (round-12 ADVICE): idempotent and cheap,
-        # and it heals the memoized plan's conf assumptions if some
-        # in-session caller flipped the parquet confs since the miss
-        _pin_parquet_confs(spark)
-        return hit
+    # re-pinned on every call, hits included: idempotent, and it heals
+    # the memoized plan if an in-session caller flipped the confs
     _pin_parquet_confs(spark)
-    path = validate_path(f"{sf_dir}/{name}.parquet")
-    df = spark.read.parquet(path)
-    for c in _NANOS_TS_COLS.get(name, []):
-        if isinstance(df.schema[c].dataType, LongType):
-            df = df.withColumn(
-                c, F.timestamp_micros(F.expr(f"`{c}` div 1000"))
-            )
-    with _TABLE_PLANS_LOCK:
-        for stale in [k for k in _TABLE_PLANS if k[0] != key[0]]:
-            del _TABLE_PLANS[stale]
-        _TABLE_PLANS[key] = df
-    return df
+
+    def build() -> DataFrame:
+        path = validate_path(f"{sf_dir}/{name}.parquet")
+        df = spark.read.parquet(path)
+        for c in _NANOS_TS_COLS.get(name, []):
+            if isinstance(df.schema[c].dataType, LongType):
+                df = df.withColumn(
+                    c, F.timestamp_micros(F.expr(f"`{c}` div 1000"))
+                )
+        return df
+
+    # memoizes the plan, never rows: saves the footer read and py4j
+    # round-trips (~0.1 s per query build); each action re-scans
+    return session_memo(spark, ("table", sf_dir, name), build)
 
 
 def table_row_count(sf_dir: str, name: str) -> int:

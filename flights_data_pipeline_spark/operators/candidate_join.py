@@ -60,16 +60,15 @@ composed plan (measured on ``incremental_neardup_ingest``, BASELINE
 round-10), constant in data size but repeated when composers re-run —
 callers whose inputs are immutable within a session (the registry
 queries: everything derives from the sf_dir parquet) pass
-``cache_key`` and pay it once, the ``_kmeans_cached`` pattern.
+``cache_key`` and pay it once, through ``session.session_memo``.
 """
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import session_memo
 from .global_order import plan_size_small
 
 #: dispatch override: ``None`` = size-adaptive; ``"broadcast"`` /
@@ -81,20 +80,6 @@ FORCE: str | None = None
 #: the semi-broadcast path. Same calibration posture as
 #: ``global_order.NAIVE_MAX_BYTES``.
 CAND_BROADCAST_MAX_BYTES = 64 * 1024 * 1024
-
-#: memoized dispatch decisions, keyed (applicationId, caller key).
-#: Only consulted when the caller passes ``cache_key`` — the caller
-#: asserts its (cand, scale_df) plans are a pure function of the key
-#: within a session (true for registry queries: immutable parquet in).
-#: Entries from OTHER applicationIds are evicted on insert, so a
-#: long-lived process cycling sessions (test suites, notebooks) never
-#: accumulates stale-session keys (round-11 ADVICE); within one
-#: session the dict is bounded by the number of distinct caller keys.
-_DECISIONS: dict[tuple[str, object], str] = {}
-
-#: guards _DECISIONS (round-12 ADVICE): driver thread pools exist in
-#: this codebase; iterate-then-delete under concurrent insert raises.
-_DECISIONS_LOCK = threading.Lock()
 
 
 def dispatch(
@@ -115,38 +100,21 @@ def dispatch(
     """
     if FORCE is not None:
         return FORCE
-    if cache_key is not None:
-        key = (cand.sparkSession.sparkContext.applicationId, cache_key)
-        with _DECISIONS_LOCK:
-            hit = _DECISIONS.get(key)
-        if hit is not None:
-            return hit
-    if plan_size_small(cand, CAND_BROADCAST_MAX_BYTES):
-        mode = "broadcast"
-    elif scale_df is not None and plan_size_small(
-        scale_df, CAND_BROADCAST_MAX_BYTES
-    ):
-        mode = "semi-broadcast"
-    else:
-        mode = "shuffle"
-    if cache_key is not None:
-        app_id = key[0]
-        with _DECISIONS_LOCK:
-            for stale in [k for k in _DECISIONS if k[0] != app_id]:
-                del _DECISIONS[stale]
-            _DECISIONS[key] = mode
-    return mode
 
+    def decide() -> str:
+        if plan_size_small(cand, CAND_BROADCAST_MAX_BYTES):
+            return "broadcast"
+        if scale_df is not None and plan_size_small(
+            scale_df, CAND_BROADCAST_MAX_BYTES
+        ):
+            return "semi-broadcast"
+        return "shuffle"
 
-def use_broadcast(cand: DataFrame, scale_df: DataFrame | None = None) -> bool:
-    """Back-compat boolean view of :func:`dispatch` for callers that
-    only distinguish "may broadcast the ID LIST" from "must shuffle":
-    True for both ``broadcast`` and ``semi-broadcast`` (the id list is
-    linear-bounded under either certificate). NEVER use this to gate a
-    pair-frame broadcast — that is exactly the quadratic-blowup hole
-    the three-way dispatch closes; use :func:`dispatch` or
-    :func:`join_candidates` instead."""
-    return dispatch(cand, scale_df) != "shuffle"
+    if cache_key is None:
+        return decide()
+    # the caller asserts its (cand, scale_df) plans are a pure function
+    # of cache_key within a session, so the key alone decides a hit
+    return session_memo(cand.sparkSession, ("dispatch", cache_key), decide)
 
 
 def join_candidates(

@@ -23,8 +23,6 @@ near-dup plan. The n-gram Jaccard query is the *verification* kernel
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -35,6 +33,7 @@ from ..operators.candidate_join import (
     filter_by_keys,
     join_candidates,
 )
+from ..session import session_memo
 from .registry import query
 
 #: number of MinHash permutations — the 8 disjoint 4-hex-char slices of
@@ -311,61 +310,21 @@ def minhash_state(d: DataFrame) -> DataFrame:
     )
 
 
-#: memoized PURE plans (no checkpoint anywhere in the tree), keyed
-#: (applicationId, sf_dir, kind) — the ``candidate_join._DECISIONS``
-#: pattern applied to the clan's shared plan builders. Building the
-#: md5-dense per-doc signature plan costs ~0.4-0.6 s of py4j
-#: round-trips (measured, round-12 profile) and every clan member
-#: rebuilds it per run; the plan is a pure function of the immutable
-#: sf_dir parquet, so the OBJECT is reusable. Plans only — each action
-#: on a memoized plan re-reads parquet and recomputes rows; a
-#: checkpointed frame (which holds materialized blocks) must never
-#: land in here.
-_PURE_PLANS: dict[tuple[str, str, str], DataFrame] = {}
-
-#: guards the module's plan/probe memos (round-12 ADVICE): driver
-#: ThreadPoolExecutors exist in this codebase, and dict iterate-then-
-#: delete under concurrent insert raises RuntimeError. Contention at
-#: plan-build frequency is negligible.
-_MEMO_LOCK = threading.Lock()
-
-
-def _pure_plan_memo(spark: SparkSession, sf_dir: str, kind: str, build):
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    with _MEMO_LOCK:
-        hit = _PURE_PLANS.get(key)
-    if hit is not None:
-        return hit
-    df = build()
-    with _MEMO_LOCK:
-        for stale in [k for k in _PURE_PLANS if k[0] != key[0]]:
-            del _PURE_PLANS[stale]
-        _PURE_PLANS[key] = df
-    return df
-
-
-#: memoized few-splits probe per (applicationId, sf_dir, table): the
-#: ``inputFiles()`` listing is a driver round-trip paid per plan build
-#: otherwise; the answer is a pure function of the immutable sf_dir.
-_FEW_SPLITS: dict[tuple[str, str, str], bool] = {}
-
-
 def table_has_few_splits(
     spark: SparkSession, sf_dir: str, table: str = "documents"
 ) -> bool:
-    key = (spark.sparkContext.applicationId, sf_dir, table)
-    with _MEMO_LOCK:
-        hit = _FEW_SPLITS.get(key)
-    if hit is None:
+    """Whether ``table``'s scan has fewer splits than half the cores,
+    memoized per session: the ``inputFiles()`` listing is a driver
+    round-trip, and the answer is a pure function of the immutable
+    sf_dir."""
+
+    def probe() -> bool:
         n_cores = spark.sparkContext.defaultParallelism
-        hit = len(t(spark, sf_dir, table).inputFiles()) < max(
+        return len(t(spark, sf_dir, table).inputFiles()) < max(
             2, n_cores // 2
         )
-        with _MEMO_LOCK:
-            for stale in [k for k in _FEW_SPLITS if k[0] != key[0]]:
-                del _FEW_SPLITS[stale]
-            _FEW_SPLITS[key] = hit
-    return hit
+
+    return session_memo(spark, ("few_splits", sf_dir, table), probe)
 
 
 def _spread_small_scan(
@@ -389,10 +348,12 @@ def _spread_small_scan(
 
 def _minhash_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``minhash_state`` over the corpus table as a PURE plan (no
-    checkpoint anywhere in the tree), memoized per (session, sf_dir) —
-    see ``_PURE_PLANS``. Use for size DISPATCH (``cand_dispatch``
-    needs an estimatable plan); query bodies consume the per-call
-    checkpointed twin ``_minhash_per_doc_ckpt``."""
+    checkpoint anywhere in the tree), memoized per (session, sf_dir):
+    the md5-dense plan costs ~0.4-0.6 s of py4j round-trips to build.
+    Plans only — a checkpointed frame holds blocks and is never
+    memoized. Use for size DISPATCH (``cand_dispatch`` needs an
+    estimatable plan); query bodies consume the per-call checkpointed
+    twin ``_minhash_per_doc_ckpt``."""
 
     def build() -> DataFrame:
         d = _spread_small_scan(spark, sf_dir, t(spark, sf_dir, "documents"))
@@ -402,7 +363,7 @@ def _minhash_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_cores = spark.sparkContext.defaultParallelism
         return minhash_state(d).repartition(n_cores, "doc_id")
 
-    return _pure_plan_memo(spark, sf_dir, "per_doc", build)
+    return session_memo(spark, ("minhash_per_doc", sf_dir), build)
 
 
 def _minhash_per_doc_ckpt(spark: SparkSession, sf_dir: str) -> DataFrame:

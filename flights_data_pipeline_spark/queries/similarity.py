@@ -31,6 +31,7 @@ from pyspark.sql.window import Window as W
 
 from ..io.catalog import load_table as t
 from ..io.catalog import table_row_count
+from ..session import session_memo
 from . import pinned_oracles
 from .registry import query
 
@@ -852,30 +853,17 @@ def adaptive_kmeans_blocks(n_vectors: int, assignments_per_vector: int = 1) -> i
     return max(SEMANTIC_K_MIN, min(SEMANTIC_K_MAX, need))
 
 
-#: session-scoped fitted-quantizer cache: (applicationId, sf_dir, k) →
-#: KMeansModel. Same pattern as the BPE merge-table cache
-#: (``text._learned_merges``): the TRAINED artifact is what consumers
-#: need, not the training run — a production IVF/blocking pipeline
-#: persists the quantizer once and every query loads it. All four
-#: consumers fit the identical configuration (3-round hash-init
-#: Lloyd's on the embeddings corpus), differing only in k, so the key
-#: is (session, corpus, k); the corpus tables are immutable inputs
-#: within a session. The model's DataFrames are localCheckpointed by
-#: ``kmeans_fit``, so reuse replays no lineage. ``keep_assignments``
-#: is always on — the fit's diagnostics pass computes the labels
-#: anyway, and retaining them lets the blocking consumers skip a full
-#: corpus re-assignment scan.
-_KMEANS_MODELS: dict[tuple[str, str, int], object] = {}
-
-
 def _kmeans_cached(spark: SparkSession, sf_dir: str, k: int):
     """One 3-round hash-init Lloyd's fit per (session, corpus, k);
-    returns the cached ``KMeansModel`` (centroids + assignments)."""
+    returns the memoized ``KMeansModel`` (centroids + assignments).
+    Consumers need the TRAINED quantizer, not the training run; the
+    model's frames are localCheckpointed by ``kmeans_fit``, so reuse
+    replays no lineage. ``keep_assignments`` lets the blocking
+    consumers skip a corpus re-assignment scan."""
     from ..operators.kmeans import kmeans_fit
 
-    key = (spark.sparkContext.applicationId, sf_dir, k)
-    if key not in _KMEANS_MODELS:
-        _KMEANS_MODELS[key] = kmeans_fit(
+    def fit():
+        return kmeans_fit(
             t(spark, sf_dir, "embeddings"),
             k=k,
             max_iterations=3,
@@ -883,7 +871,8 @@ def _kmeans_cached(spark: SparkSession, sf_dir: str, k: int):
             keep_assignments=True,
             expect_convergence=False,
         )
-    return _KMEANS_MODELS[key]
+
+    return session_memo(spark, ("kmeans", sf_dir, k), fit)
 
 
 @query(

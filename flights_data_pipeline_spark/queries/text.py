@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..io.catalog import load_table as t
+from ..session import session_memo
 from .registry import query
 
 def _tokens() -> F.Column:
@@ -1739,25 +1740,20 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session-scoped merge-table cache: (applicationId, sf_dir) → merges.
-#: BPE encoding needs the TRAINED artifact, not the training run — a
-#: production pipeline persists the merge table once and every encoder
-#: loads it. Keying on applicationId keeps the cache correct across
-#: sessions (a new JVM retrains); within a session the corpus tables
-#: are immutable inputs, so reuse is sound. The artifact is ~BPE_ROUNDS
-#: tuples of short strings — driver-side size is trivial.
-_LEARNED_MERGES: dict[tuple[str, str], list[tuple[str, str]]] = {}
-
-
 def _learned_merges(spark: SparkSession, sf_dir: str) -> list[tuple[str, str]]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LEARNED_MERGES:
-        _LEARNED_MERGES[key] = [
+    """The trained merge table, memoized per (session, sf_dir). BPE
+    encoding needs the TRAINED artifact, not the training run — a
+    production pipeline persists the merge table once and every encoder
+    loads it. The artifact is ~BPE_ROUNDS tuples of short strings."""
+
+    def train() -> list[tuple[str, str]]:
+        return [
             (r["left"], r["right"])
             # scale-ok: BPE_ROUNDS merge rows — the trained artifact, not data
             for r in bpe_train_merges(spark, sf_dir).orderBy("round").collect()
         ]
-    return _LEARNED_MERGES[key]
+
+    return session_memo(spark, ("bpe_merges", sf_dir), train)
 
 
 def _bpe_apply_pinned_oracle() -> str:

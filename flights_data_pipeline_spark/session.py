@@ -22,8 +22,41 @@ Design decisions (all aimed at oracle-exact correctness + 100 TB posture):
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
+
+#: the engine's one driver-side memo, keyed (applicationId, caller key).
+#: Holds values that are a pure function of the key within a session:
+#: plans over the immutable sf_dir parquet, dispatch decisions, probe
+#: answers and trained artifacts (BPE merges, k-means models).
+_MEMO: dict[tuple[str, object], object] = {}
+_MEMO_LOCK = threading.Lock()
+
+
+def session_memo(spark: SparkSession, key: object, build):
+    """``build()`` once per (session, ``key``); later calls return the
+    same object. Callers prefix ``key`` with a tag naming what is cached.
+
+    * ``build()`` runs OUTSIDE the lock: builds re-enter the memo (most
+      reach ``io.catalog.load_table``) and may run Spark jobs.
+    * Two callers that miss together both build; the first insert wins
+      and both get that object back.
+    * Presence is tested by key, so a falsy value is a hit.
+    * An insert evicts every other application's entries, so a process
+      that cycles sessions never keeps a stopped session's plans or
+      checkpointed frames alive.
+    """
+    app_id = spark.sparkContext.applicationId
+    full_key = (app_id, key)
+    with _MEMO_LOCK:
+        if full_key in _MEMO:
+            return _MEMO[full_key]
+    value = build()
+    with _MEMO_LOCK:
+        for stale in [k for k in _MEMO if k[0] != app_id]:
+            del _MEMO[stale]
+        return _MEMO.setdefault(full_key, value)
 
 
 def default_parallelism() -> int:

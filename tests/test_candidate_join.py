@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import pytest
 
+from flights_data_pipeline_spark import session
 from flights_data_pipeline_spark.operators import candidate_join as cj
 from flights_data_pipeline_spark.queries import REGISTRY
 
@@ -136,16 +137,12 @@ def test_dispatch_decision_cache(spark):
     per_doc = _minhash_per_doc(spark, SF_DIR)
     cand = _lsh_candidates(per_doc)
     key = ("test_dispatch_decision_cache", SF_DIR)
-    cj._DECISIONS.pop(
-        (spark.sparkContext.applicationId, key), None
-    )
+    memo_key = (spark.sparkContext.applicationId, ("dispatch", key))
+    session._MEMO.pop(memo_key, None)
     first = cj.dispatch(cand, per_doc, cache_key=key)
     assert first == "semi-broadcast"
     # the memo is consulted before any plan walk: a conflicting frame
     # under the same key returns the cached decision (callers assert
     # key → plans is a pure function within a session)
     assert cj.dispatch(cand, None, cache_key=key) == first
-    assert (
-        spark.sparkContext.applicationId,
-        key,
-    ) in cj._DECISIONS
+    assert memo_key in session._MEMO

@@ -186,7 +186,7 @@ def probe_docs128(spark) -> dict:
     """Execute the three candidate-gated queries end-to-end at 640k
     docs on whatever path the dispatch naturally picks (expected:
     shuffle — the corpus proxy exceeds the 64 MB certificate)."""
-    from flights_data_pipeline_spark.operators import candidate_join as cj
+    from flights_data_pipeline_spark import session
 
     out = {}
     for name in GATED_QUERIES:
@@ -199,9 +199,11 @@ def probe_docs128(spark) -> dict:
         spark.sparkContext._jvm.System.gc()
     # the memoized decisions these executions actually used
     out["decisions"] = {
-        str(k[1]): v
-        for k, v in cj._DECISIONS.items()
-        if isinstance(k[1], tuple) and DOCS128 in str(k[1])
+        str(k[1][1]): v
+        for k, v in session._MEMO.items()
+        if k[1][0] == "dispatch"
+        and isinstance(k[1][1], tuple)
+        and DOCS128 in str(k[1][1])
     }
     return out
 
