@@ -7,25 +7,13 @@ runs per query, reports the median. Materialization uses the `noop`
 sink so every output column is computed but nothing is collected to
 the driver (collect would measure driver serialization, not the plan).
 
-Two warmups, not one: generated-code-heavy queries (the md5-dense
-minhash signature pass) need a second execution before HotSpot's C2
-tier compiles their codegen — their first two runs measure the JIT,
-not the plan (observed: 11 s → 6 s → 1.5 s steady). The cold protocol
-below intentionally keeps that cliff visible.
-
-Set SPARK_GRAFT_BENCH_COLD=1 for the cold protocol: no warmup, a
-single timed run per query — the shape of a first-ever execution
-(JIT/codegen/footer-cache misses included). Warm medians dodge
-intermittent costs (GC from oversized broadcasts, one-off reopt); the
-cold column is what catches them, so regressions are judged on both.
-
-LSH-composer clan members (``registry.lsh_composer_clan()``) get the
-``tools/iso_warm.py`` treatment instead — 5 warmups + driver GC
-between EVERY run — because their warm plateau is session-heat
-dependent: the 2-warmup protocol left headline clan rows swinging
-2-4× round-over-round with no source change (round-11 VERDICT
-"What's wrong #1"; BASELINE round-11 analysis). With the deep
-treatment the headline row IS the isolated-warm yardstick.
+Every query gets the same protocol (:func:`time_query`): ``WARMUPS``
+untimed executions, then 3 timed, with a driver GC after every
+execution so ContextCleaner frees dead broadcast/localCheckpoint
+blocks before the next one. Two warmups, not one: generated-code-heavy
+queries (the md5-dense minhash signature pass) need a second execution
+before HotSpot's C2 tier compiles their codegen — their first two runs
+measure the JIT, not the plan (observed: 11 s → 6 s → 1.5 s steady).
 
 Prints TWO JSON lines:
   1. full fidelity — {"metric", "value", "unit", "queries": {every
@@ -58,7 +46,6 @@ import sys
 import time
 
 from flights_data_pipeline_spark.queries import REGISTRY
-from flights_data_pipeline_spark.queries.registry import lsh_composer_clan
 from flights_data_pipeline_spark.session import get_spark
 
 HEADLINE = [
@@ -157,9 +144,28 @@ HEADLINE = [
 #: warn threshold for the final line's length (snapshot is 2000 chars)
 FINAL_LINE_WARN_CHARS = 1800
 
+#: untimed executions before the timed ones, for every query
+WARMUPS = 2
+
 
 def materialize(df) -> None:
     df.write.mode("overwrite").format("noop").save()
+
+
+def time_query(run, gc, warmups: int, runs: int = 3) -> float:
+    """The one timing protocol: ``warmups`` untimed calls of ``run``,
+    then ``runs`` timed ones, with ``gc()`` (untimed) after every call.
+    Returns the median of the timed calls in seconds."""
+    for _ in range(warmups):
+        run()
+        gc()
+    times = []
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        run()
+        times.append(time.perf_counter() - t0)
+        gc()
+    return statistics.median(times)
 
 
 def short_key_map(names: list[str]) -> dict[str, str]:
@@ -224,11 +230,6 @@ def main() -> None:
         sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf"))
     except ValueError:
         sf = -1.0
-    cold = os.environ.get("SPARK_GRAFT_BENCH_COLD", "") == "1"
-    # discover the clan FIRST: it reads query source via inspect, so
-    # doing it before the (slow) warehouse build shrinks the window in
-    # which a concurrent source edit can skew the AST walk
-    clan = set(lsh_composer_clan())
     spark = get_spark("fdp-spark-bench")
 
     # One-time flights warehouse build, timed as its OWN metric: it is
@@ -256,34 +257,21 @@ def main() -> None:
         q = REGISTRY.get(name)
         if q is None:
             continue
-        deep = name in clan  # iso_warm treatment (module docstring)
         try:
-            if not cold:
-                for _ in range(5 if deep else 2):
-                    materialize(q.fn(spark, sf_dir))
-                    if deep:
-                        _gc()
-            runs = []
-            for _ in range(1 if cold else 3):
-                t0 = time.perf_counter()
-                materialize(q.fn(spark, sf_dir))
-                runs.append(time.perf_counter() - t0)
-                if deep:
-                    _gc()
-            timings[name] = round(statistics.median(runs), 4)
+            timings[name] = round(
+                time_query(
+                    lambda: materialize(q.fn(spark, sf_dir)), _gc, WARMUPS
+                ),
+                4,
+            )
         except Exception as exc:  # never let one query sink the whole bench
             print(f"bench: {name} failed: {exc}", file=sys.stderr)
             timings[name] = -1.0
-        # between-query hygiene (untimed): force the driver GC so
-        # ContextCleaner frees dead broadcast/localCheckpoint blocks —
-        # without it, accumulated session state can inflate late
-        # queries well beyond their isolated cost (see bench_full.py)
-        _gc()
+            _gc()
 
     total = round(sum(v for v in timings.values() if v >= 0), 4)
-    metric = "headline_queries_total_" + ("cold_sec" if cold else "median_sec")
     full = {
-        "metric": metric,
+        "metric": "headline_queries_total_median_sec",
         "value": total,
         "unit": "sec",
         "queries": timings,

@@ -45,6 +45,13 @@ SMALL_GRAPH_MAX_EDGES = 100_000
 FORCE: str | None = None
 
 
+def is_small_graph(n_edges: int) -> bool:
+    """The one size-dispatch predicate of every graph kernel (components,
+    pagerank, k-core peel): ``FORCE`` pins a path, else the edge count
+    decides against ``SMALL_GRAPH_MAX_EDGES``."""
+    return FORCE == "small" or (FORCE is None and n_edges <= SMALL_GRAPH_MAX_EDGES)
+
+
 def _small_graph_components(e: DataFrame) -> DataFrame:
     """Single-task closure of a dispatch-certified SMALL symmetrized
     edge list ``(u, v)``: repartition to one task and run union-find
@@ -126,7 +133,7 @@ def connected_components(
     # join+aggregate+checkpoint jobs — the iterative loop's per-round
     # scheduling overhead dominates it by 10-40× at this size. Large
     # graphs take the iterative path below, unchanged.
-    if FORCE == "small" or (FORCE is None and n_edges <= SMALL_GRAPH_MAX_EDGES):
+    if is_small_graph(n_edges):
         return _small_graph_components(e)
     spark = e.sparkSession
     n_part = max(

@@ -1597,9 +1597,7 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import graph as _G
 
     n_e = edges.count()
-    if _G.FORCE == "small" or (
-        _G.FORCE is None and n_e <= _G.SMALL_GRAPH_MAX_EDGES
-    ):
+    if _G.is_small_graph(n_e):
         state = _pagerank_small(edges)
         return (
             state.select(
@@ -3238,9 +3236,7 @@ def kcore_edges(edges: DataFrame, k: int) -> DataFrame:
     cur = edges
     # scale-ok: 1-row count per round, the peel loop's convergence probe
     n_cur = cur.count()
-    if _G.FORCE == "small" or (
-        _G.FORCE is None and n_cur <= _G.SMALL_GRAPH_MAX_EDGES
-    ):
+    if _G.is_small_graph(n_cur):
         return _kcore_edges_small(cur, k)
     while True:
         sym = cur.unionByName(

@@ -150,109 +150,3 @@ def oracle_sql_map() -> dict[str, str]:
         if text is not None:
             out[name] = text
     return out
-
-
-#: the shared heavy subtrees whose composers need special sweep
-#: treatment (see :func:`lsh_composer_clan`): the MinHash/LSH
-#: candidate pipeline and the winnowing fingerprint pass.
-_CLAN_SEED_HELPERS = frozenset(
-    {
-        "_minhash_per_doc",
-        "_lsh_candidates",
-        "winnow_fp_set",
-    }
-)
-
-
-def _called_names(fn) -> set[str]:
-    """Names invoked by ``fn``: direct calls (``helper(...)``/
-    ``other_query(...)``) plus registry compositions
-    (``REGISTRY["name"].fn(...)``) — docstrings and comments never
-    match (the substring-scan false-positive class)."""
-    import ast
-    import inspect
-    import textwrap
-
-    try:
-        tree = ast.parse(textwrap.dedent(inspect.getsource(fn)))
-    except (OSError, SyntaxError, TypeError):
-        return set()
-    out: set[str] = set()
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Call):
-            f = node.func
-            if isinstance(f, ast.Name):
-                out.add(f.id)
-            elif isinstance(f, ast.Attribute):
-                out.add(f.attr)
-        if (
-            isinstance(node, ast.Subscript)
-            and isinstance(node.value, ast.Name)
-            and node.value.id == "REGISTRY"
-            and isinstance(node.slice, ast.Constant)
-            and isinstance(node.slice.value, str)
-        ):
-            out.add(node.slice.value)
-    return out
-
-
-def _transitive_called_names(fn, memo: dict) -> set[str]:
-    """:func:`_called_names` closed transitively through module-level
-    helper FUNCTIONS defined inside this package: a called name that
-    resolves (via the caller's ``__globals__``) to a package-local
-    function contributes its own call set too. This is what lets a
-    non-registry wrapper around an LSH kernel (the ``_candidate_runs``
-    pattern, which previously had to be hand-seeded) carry its
-    composers into the clan automatically — the round-11 ADVICE's
-    hand-list failure mode, closed structurally."""
-    key = (getattr(fn, "__module__", None), getattr(fn, "__qualname__", None))
-    hit = memo.get(key)
-    if hit is not None:
-        return hit
-    memo[key] = set()  # cycle guard: recursion sees an empty set
-    names = _called_names(fn)
-    out = set(names)
-    g = getattr(fn, "__globals__", {})
-    for n in names:
-        obj = g.get(n)
-        if (
-            callable(obj)
-            and obj is not fn
-            and getattr(obj, "__module__", "").startswith(
-                __name__.split(".queries")[0]
-            )
-            and hasattr(obj, "__globals__")  # plain function, not a class
-        ):
-            out |= _transitive_called_names(obj, memo)
-    memo[key] = out
-    return out
-
-
-def lsh_composer_clan() -> list[str]:
-    """Every registered query that (transitively) composes the
-    MinHash/LSH candidate pipeline or the winnowing fingerprint
-    subtree — the family whose executions pin deep tiered-JIT +
-    localCheckpoint state and therefore need the sweep-tail + GC
-    protocol in ``tools/bench_full.py``.
-
-    Discovered from the registry by AST call-graph inspection (direct
-    helper calls — walked TRANSITIVELY through package-local helper
-    functions — composed-query calls by name, and
-    ``REGISTRY["..."].fn`` compositions), closed to a fixpoint — a new
-    composer joins the clan the day it is registered, instead of
-    rotating the sweep's one inflated draw onto itself (the round-10
-    VERDICT's structural-fix mandate; the hand-maintained list missed
-    ``split_leakage_report`` exactly this way, and the hand-seeded
-    ``_candidate_runs`` helper was the same failure mode one level
-    down — both now fall out of the transitive walk)."""
-    memo: dict = {}
-    deps = {
-        name: _transitive_called_names(q.fn, memo)
-        for name, q in REGISTRY.items()
-    }
-    clan = {n for n, d in deps.items() if d & _CLAN_SEED_HELPERS}
-    while True:
-        grown = clan | {n for n, d in deps.items() if d & clan}
-        if grown == clan:
-            return sorted(clan)
-        clan = grown

@@ -5,11 +5,12 @@ nightly job that wrote it)."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 import textwrap
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _run(code: str) -> str:

@@ -86,46 +86,3 @@ def test_rotation_head_prefers_unsampled(tmp_path):
     head = order[: min(50, len(needs_signal))]
     assert set(head) <= set(needs_signal)
 
-
-def test_lsh_composer_clan_discovery():
-    """The sweep-tail family is DISCOVERED from the registry (AST
-    call-graph closure), not hand-named — the round-10 sweep's
-    rotating inflated draw came from a hand-list missing
-    ``split_leakage_report``. Pin the known members (all previous
-    hand-list names + the r10 draw + the winnow composers) and sane
-    bounds so a refactor that silently empties the discovery fails."""
-    from flights_data_pipeline_spark.queries import REGISTRY
-    from flights_data_pipeline_spark.queries.registry import (
-        lsh_composer_clan,
-    )
-
-    clan = lsh_composer_clan()
-    must_have = {
-        # the round-9/10 hand-list
-        "dedup_keep_list",
-        "dedup_rate_by_source",
-        "incremental_neardup_ingest",
-        "near_dup_clusters",
-        "cluster_representatives",
-        "cross_source_neardup_matrix",
-        "lsh_band_precision",
-        "longest_shared_run",
-        # the round-10 rotating draw the hand-list missed
-        "split_leakage_report",
-        # winnowing-subtree composers (same deep-JIT mechanism)
-        "contamination_matrix",
-        "split_contamination_matrix",
-        "winnowing_fingerprints",
-        # composers that reach the LSH kernel only THROUGH the
-        # non-registry `_candidate_runs` helper — these pin the
-        # transitive helper walk (round-11 ADVICE: a hand-seeded
-        # helper list is the same failure mode one level down)
-        "span_trim_plan",
-        "trim_savings_by_source",
-        "post_trim_token_counts",
-    }
-    assert must_have <= set(clan), sorted(must_have - set(clan))
-    assert set(clan) <= set(REGISTRY)
-    # the clan is a family, not the registry: discovery regressions
-    # that sweep in half the registry (or drop to nothing) must fail
-    assert 8 <= len(clan) <= 30, clan

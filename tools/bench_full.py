@@ -1,15 +1,16 @@
 #!/usr/bin/env python
 """Full-registry warm sweep — a longitudinal perf row for EVERY query.
 
-The driver bench times the 31 headline queries; this tool times all of
-them (same protocol as bench.py: 2 warmups + 3 timed runs, median,
-noop sink) so each round leaves a complete per-query timing artifact.
-The iterative-closure family runs LAST with tripled warmups — see
-``CLOSURE_FAMILY`` below for the tiered-JIT mechanism that otherwise
-inflates one of its rows per sweep.
+The driver bench times the headline queries; this tool times all of
+them, or only the ones named on the command line, with bench.py's own
+protocol (``bench.time_query``: ``bench.WARMUPS`` warmups + median of 3
+timed, driver GC after every execution, noop sink), so each round
+leaves a complete per-query timing artifact and an A/B of a few
+queries needs no other tool.
 
 Usage:
     python tools/bench_full.py > BENCH_full_rNN.json
+    python tools/bench_full.py minhash_lsh_candidates near_dup_clusters
     python tools/bench_diff.py BENCH_full_r03.json BENCH_full_r04.json
 
 Environment: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
@@ -20,99 +21,49 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from flights_data_pipeline_spark.queries import REGISTRY
-from flights_data_pipeline_spark.session import get_spark
+from bench import WARMUPS, materialize, time_query  # noqa: E402
+from flights_data_pipeline_spark.queries import REGISTRY  # noqa: E402
+from flights_data_pipeline_spark.session import get_spark  # noqa: E402
 
 
-def materialize(df) -> None:
-    df.write.mode("overwrite").format("noop").save()
-
-
-#: the iterative-closure/LSH family (shared connected-components /
-#: LSH-index loop) pays tiered-JIT warmup DEEPER than the per-query
-#: warmups absorb: fresh-session probes (BASELINE.md round-9) show
-#: 2-4× inflation that persists through 3 back-to-back runs and only
-#: settles after ~45 other queries have executed — so in an
-#: alphabetical sweep one family member draws an inflated row per
-#: sweep (a different one each time). Protocol fix (round-9 VERDICT
-#: task 2): time these LAST, after the rest of the registry has fully
-#: heated the JVM, with tripled per-query warmups (fresh-session probes
-#: show the deepest member, cluster_representatives, only reaches its
-#: warm plateau on run ~5-6) — the published row then reflects the
-#: warm level an operator actually runs at.
-#:
-#: Round-11 structural fix (round-10 VERDICT "what's wrong" #1): the
-#: family is DISCOVERED from the registry by AST call-graph closure
-#: (``registry.lsh_composer_clan`` — every query that transitively
-#: composes the MinHash/LSH or winnowing subtrees), not hand-named.
-#: The r10 hand-list tailed only 8 names, so the one inflated draw per
-#: sweep rotated onto whichever un-tailed composer ran latest
-#: (``split_leakage_report`` 9.72 s vs 3.15 s isolated in
-#: BENCH_full_r10); discovery also means a newly-registered composer
-#: joins the tail the day it lands.
-from flights_data_pipeline_spark.queries.registry import lsh_composer_clan
-
-CLOSURE_FAMILY = lsh_composer_clan()
-
-
-def main() -> None:
+def main(names: list[str]) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf"))
     except ValueError:
         sf = -1.0
+    unknown = [n for n in names if n not in REGISTRY]
+    if unknown:
+        sys.exit(f"bench_full: unknown queries: {', '.join(unknown)}")
     spark = get_spark("fdp-spark-bench-full")
 
-    timings: dict[str, float] = {}
-    order = sorted(n for n in REGISTRY if n not in CLOSURE_FAMILY) + [
-        n for n in CLOSURE_FAMILY if n in REGISTRY
-    ]
+    # ContextCleaner frees dead broadcast/localCheckpoint blocks only
+    # after a driver GC; without one after every execution a long sweep
+    # accumulates enough executor state to inflate later queries 10×
+    # (round-6 postmortem: cross_source_neardup_matrix 23.5 s in-sweep
+    # vs 1.8 s isolated)
     def _gc() -> None:
         spark.catalog.clearCache()
         spark.sparkContext._jvm.System.gc()
 
-    for name in order:
+    timings: dict[str, float] = {}
+    for name in names or sorted(REGISTRY):
         q = REGISTRY[name]
-        fam = name in CLOSURE_FAMILY
-        n_warm = 6 if fam else 2
         try:
-            for _ in range(n_warm):  # codegen + C2 JIT + footer cache
-                materialize(q.fn(spark, sf_dir))
-                if fam:
-                    # closure executions pin ~44 localCheckpoint label
-                    # blocks EACH; ContextCleaner frees them only after
-                    # a driver GC, so 9 back-to-back runs of one family
-                    # query accumulate enough executor state to inflate
-                    # its own timed window 2-5x (the residual
-                    # one-slow-draw mechanism — the per-query GC below
-                    # never fires between a single query's runs)
-                    _gc()
-            runs = []
-            for _ in range(3):
-                t0 = time.perf_counter()
-                materialize(q.fn(spark, sf_dir))
-                runs.append(time.perf_counter() - t0)
-                if fam:
-                    _gc()
-            timings[name] = round(statistics.median(runs), 4)
+            timings[name] = round(
+                time_query(
+                    lambda: materialize(q.fn(spark, sf_dir)), _gc, WARMUPS
+                ),
+                4,
+            )
         except Exception as exc:  # pragma: no cover - keep sweeping
             print(f"bench_full: {name} failed: {exc}", file=sys.stderr)
             timings[name] = -1.0
-        # sweep hygiene, BETWEEN queries (untimed): ContextCleaner only
-        # frees dead broadcast/localCheckpoint blocks after a driver GC,
-        # and a 224-query sweep can accumulate enough executor-memory
-        # state between the 1-minute periodic GCs to inflate later
-        # queries 10× (round-6 postmortem: cross_source_neardup_matrix
-        # 23.5 s in-sweep vs 1.8 s isolated). Forcing the GC per query
-        # keeps every timing an isolated-session number.
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
+            _gc()
 
     total = round(sum(v for v in timings.values() if v >= 0), 4)
     print(
@@ -130,4 +81,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

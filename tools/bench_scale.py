@@ -18,9 +18,7 @@ What it records (one JSON line, -> BENCH_sf1.json):
   shuffle path (1 warm + 1 timed; these are the scale path's first
   non-forced executions).
 * ``sf01``/``sf1`` — per-query medians for the full headline at both
-  scales (same protocol both passes: 2 warmups + 3 timed, median,
-  noop sink, GC between queries; LSH-composer clan last with
-  inter-run GCs — the bench_full.py tail protocol), plus the flights
+  scales (bench.py's ``time_query`` protocol both passes), plus the flights
   warehouse build, plus per-query disk/memory spill and shuffle bytes
   from the UI REST API (job-group scoped, polled per query so stage
   eviction cannot lose rows).
@@ -39,18 +37,14 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
 import time
 import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import HEADLINE, materialize  # noqa: E402
+from bench import HEADLINE, WARMUPS, materialize, time_query  # noqa: E402
 from flights_data_pipeline_spark.queries import REGISTRY  # noqa: E402
-from flights_data_pipeline_spark.queries.registry import (  # noqa: E402
-    lsh_composer_clan,
-)
 from flights_data_pipeline_spark.session import get_spark  # noqa: E402
 
 SF01 = os.environ.get("SPARK_GRAFT_SF01_DIR", "/root/testdata/sf0.1")
@@ -114,8 +108,8 @@ def dispatch_probes(spark) -> dict:
 
 
 def run_pass(spark, sf_dir: str, base, app_id) -> dict:
-    """One headline pass: bench.py protocol + clan tail + REST
-    per-query shuffle/spill."""
+    """One headline pass: bench.py protocol + REST per-query
+    shuffle/spill."""
     from flights_data_pipeline_spark.queries.flights import _warehouse
 
     sc = spark.sparkContext
@@ -129,35 +123,25 @@ def run_pass(spark, sf_dir: str, base, app_id) -> dict:
     build_sec = round(time.perf_counter() - t0, 4)
     _gc()
 
-    clan = set(lsh_composer_clan())
-    order = [n for n in HEADLINE if n not in clan] + [
-        n for n in HEADLINE if n in clan
-    ]
     timings: dict[str, float] = {}
     io: dict[str, dict] = {}
-    for name in order:
+    for name in HEADLINE:
         q = REGISTRY.get(name)
         if q is None:
             continue
-        fam = name in clan
         group = f"bench_scale:{sf_dir}:{name}"
         sc.setJobGroup(group, name)
         try:
-            for _ in range(4 if fam else 2):
-                materialize(q.fn(spark, sf_dir))
-                if fam:
-                    _gc()
-            runs = []
-            for _ in range(3):
-                t0 = time.perf_counter()
-                materialize(q.fn(spark, sf_dir))
-                runs.append(time.perf_counter() - t0)
-                if fam:
-                    _gc()
-            timings[name] = round(statistics.median(runs), 4)
+            timings[name] = round(
+                time_query(
+                    lambda: materialize(q.fn(spark, sf_dir)), _gc, WARMUPS
+                ),
+                4,
+            )
         except Exception as exc:  # pragma: no cover - keep sweeping
             print(f"bench_scale: {name}@{sf_dir} failed: {exc}", file=sys.stderr)
             timings[name] = -1.0
+            _gc()
         finally:
             # PySpark's SparkContext has no clearJobGroup; resetting
             # the local property detaches subsequent jobs
@@ -166,7 +150,6 @@ def run_pass(spark, sf_dir: str, base, app_id) -> dict:
             io[name] = _group_metrics(base, app_id, group)
         except Exception:
             io[name] = {}
-        _gc()
     total = round(sum(v for v in timings.values() if v >= 0), 4)
     spill = round(
         sum(m.get("spill_disk_mb", 0.0) for m in io.values())

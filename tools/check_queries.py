@@ -4,8 +4,8 @@ Usage: python tools/check_queries.py q1 q2 ... [--sf /root/testdata/sf0.01]
 Runs each named query through the same normalize-sort-multiset compare
 as tools/driver_sim.py, at one or more scale factors.
 """
-import sys, json
-sys.path.insert(0, "/root/repo")
+import os, sys, json
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as e
 from flights_data_pipeline_spark.session import get_spark
 import duckdb

@@ -7,8 +7,8 @@ compare at 10x the data — the at-scale certification the round-11
 VERDICT asked for (task 2): naturally-dispatched plans, not the
 FORCE-pinned small-SF twins, produce oracle-identical answers.
 """
-import sys, json
-sys.path.insert(0, "/root/repo")
+import os, sys, json
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as e
 from flights_data_pipeline_spark.session import get_spark
 import duckdb

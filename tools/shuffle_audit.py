@@ -24,7 +24,8 @@ import os
 import sys
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from bench import HEADLINE, materialize  # noqa: E402
 from flights_data_pipeline_spark.queries import REGISTRY  # noqa: E402
@@ -131,7 +132,7 @@ def main() -> None:
         f"spill {sum(m['spill_disk_mb'] for m in ok):.0f} MB.",
         "",
     ]
-    out = "/root/repo/SHUFFLE.md"
+    out = os.path.join(ROOT, "SHUFFLE.md")
     with open(out, "w") as f:
         f.write("\n".join(lines))
     print(f"wrote {out}")
