@@ -9,8 +9,11 @@ cross-engine-exact function of the driver's own parquet tables
 (``orders``, ``customer``, ``lineitem``, ``nation``, ``part``), written
 once in dialect-parameterized SQL and rendered for BOTH engines:
 
-* Spark renders against ``parquet.`<sf_dir>/<table>.parquet``` scans and
-  feeds the REAL pipeline (CSV landing, day-window upsert, transforms).
+* Spark renders against temp views over ``io.catalog.load_table`` (the
+  session-memoized scans, so a warm build infers no footer) and feeds
+  the REAL pipeline (CSV landing, day-window upsert, transforms).
+  :func:`spark_dialect` renders the same text against
+  ``parquet.`<sf_dir>/<table>.parquet``` scans, for standalone SQL.
 * DuckDB renders the same text as a WITH-chain the driver's oracle can
   evaluate directly against its registered views.
 
@@ -25,6 +28,8 @@ division is dialect-spelled (Spark ``div`` vs DuckDB ``//``).
 from __future__ import annotations
 
 from dataclasses import dataclass
+
+from ..io.catalog import load_table
 
 #: incremental window the DERIVED pipeline runs over (3 days keeps the
 #: per-day extract/land/upsert cycle count bounded; updated_at is
@@ -95,6 +100,14 @@ class Dialect:
 
 SPARK_DIALECT_FMT = "parquet.`{sf_dir}/{{table}}.parquet`"
 DUCK = Dialect(name="duck", str_t="VARCHAR", div="//", base_fmt="{table}")
+
+
+#: the testdata tables the chain reads, registered by :func:`derive_staging`
+#: as temp views named by ``_VIEWS``
+BASE_TABLES = ("nation", "orders", "customer", "lineitem", "part")
+_VIEWS = Dialect(
+    name="spark", str_t="STRING", div="div", base_fmt="derive_src_{table}"
+)
 
 
 def spark_dialect(sf_dir: str) -> Dialect:
@@ -431,9 +444,10 @@ def derive_staging(spark, sf_dir: str):
     analysis inside the loop so every returned frame is resolved
     against THIS call's views before any later call could re-register
     them for another sf_dir."""
-    d = spark_dialect(sf_dir)
+    for t in BASE_TABLES:
+        load_table(spark, sf_dir, t).createOrReplaceTempView(_VIEWS.base(t))
     out = {}
-    for name, sql in _chain(d):
+    for name, sql in _chain(_VIEWS):
         df = spark.sql(sql)
         df.schema  # force analysis now (pin resolution, see docstring)
         df.createOrReplaceTempView(name)

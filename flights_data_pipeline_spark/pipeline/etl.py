@@ -32,6 +32,7 @@ from enum import Enum
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..io import csv_codec
 from .fixtures import SCHEMAS, TABLES
@@ -84,7 +85,8 @@ def extract(
         )
         cfg = JdbcConfig(url=source_dir, table=table, driver=driver)
         return jdbc_scan(spark, cfg, ds=ds)
-    df = spark.read.parquet(f"{source_dir}/{table}")
+    # the known schema: inferring it would cost a footer-read job per call
+    df = spark.read.schema(SCHEMAS[table]).parquet(f"{source_dir}/{table}")
     if ds is not None:
         df = df.filter(day_window(ds))
     return df
@@ -132,7 +134,14 @@ def run_extract_load(
 
 
 def read_staging(spark: SparkSession, staging_dir: str, table: str) -> DataFrame:
-    return spark.read.parquet(f"{staging_dir}/{table}")
+    """A staging table, read with its known schema (no footer-read job).
+    Staging is only ever written by :func:`load_upsert` from a landed
+    CSV read with ``SCHEMAS[table]``, so that schema plus the
+    ``updated_date`` partition column is exact."""
+    schema = T.StructType(
+        SCHEMAS[table].fields + [T.StructField("updated_date", T.DateType())]
+    )
+    return spark.read.schema(schema).parquet(f"{staging_dir}/{table}")
 
 
 __all__ = [

@@ -17,6 +17,16 @@ Design decisions (all aimed at oracle-exact correctness + 100 TB posture):
   local[32]; on a real cluster this would be set to ~2-3× total cores.
 * Arrow enabled — every Python-side exchange (createDataFrame, toPandas,
   pandas_udf) is vectorized.
+* ``spark.sql.codegen.cache.maxEntries`` = :data:`CODEGEN_CACHE_ENTRIES`
+  (default 100). Whole-stage codegen caches compiled classes in an LRU
+  keyed by the generated source; the engine's working set is larger
+  than 100, so the default cache thrashes and every warm op recompiles
+  (Janino) and reloads its classes, which also restarts the JIT on
+  them. A warm warehouse build at sf0.1 compiled 246-258 classes at the
+  default, and 0-4 with the cap; the counts are at the constant.
+* A live session is returned untouched: ``getOrCreate`` would re-apply
+  the caller's runtime confs (``shuffle.partitions`` among them) to it,
+  and static confs such as the codegen cap cannot change after start.
 """
 
 from __future__ import annotations
@@ -59,6 +69,20 @@ def session_memo(spark: SparkSession, key: object, build):
         return _MEMO.setdefault(full_key, value)
 
 
+#: ``spark.sql.codegen.cache.maxEntries``, a static conf (read once, at
+#: JVM start). Distinct generated classes, counted as Janino compiles
+#: (``CodegenMetrics.METRIC_COMPILATION_TIME``) in a fresh ``local[4]``
+#: session at sf0.1: one flights warehouse build 246, one pass of
+#: perfbench's eager queries 119, one pass of the 76 ``bench.py``
+#: headline queries 1,454 (a second pass adds 54). With the default of
+#: 100 every warm build compiled ~250 classes again. With this cap, five
+#: warm builds in one session compiled 4, 4, 0, 0, 0: the 4 are two
+#: queries whose codegen stages AQE numbered the other way round. The
+#: JVM's Metaspace went 166 -> 171 MB over those builds, as it grows at
+#: the default (166 -> 167 MB over two).
+CODEGEN_CACHE_ENTRIES = 2000
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or (os.cpu_count() or 8)
 
@@ -71,7 +95,11 @@ def get_spark(
     driver_memory: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the engine's SparkSession with pinned semantics."""
+    """Build the engine's SparkSession with pinned semantics, or return
+    the live one untouched (see the module docstring)."""
+    live = SparkSession._instantiatedSession
+    if live is not None and live._sc._jsc is not None:
+        return live
     cpus = cpus or default_parallelism()
     shuffle_partitions = shuffle_partitions or cpus
     driver_memory = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
@@ -100,6 +128,7 @@ def get_spark(
         # GC is rare, so state accumulates and repeated queries degrade
         # 10-30× (measured). Forcing a periodic GC keeps cleanup flowing.
         .config("spark.cleaner.periodicGC.interval", "1min")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -144,6 +173,7 @@ def get_persistent_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.ansi.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .enableHiveSupport()
         .getOrCreate()
     )

@@ -4,26 +4,8 @@ from __future__ import annotations
 
 import tempfile
 
-import pytest
-
 from flights_data_pipeline_spark.__main__ import main
 from flights_data_pipeline_spark.pipeline import fixtures
-
-
-@pytest.fixture(autouse=True)
-def _restore_session_confs(spark):
-    """``main()`` calls ``get_spark()``, whose ``getOrCreate`` re-applies
-    the CLI's runtime confs (``spark.sql.shuffle.partitions`` =
-    ``SPARK_GRAFT_CPUS``) to the shared test session; put every changed
-    one back so later tests see the session they were written for."""
-    before = spark.conf.getAll
-    yield
-    for key, value in spark.conf.getAll.items():
-        if before.get(key) != value and spark.conf.isModifiable(key):
-            if key in before:
-                spark.conf.set(key, before[key])
-            else:
-                spark.conf.unset(key)
 
 
 def test_list_queries(capsys):
