@@ -1,52 +1,17 @@
-"""Physical data-layout helpers: write-side ordering for data skipping.
+"""Physical data-layout maintenance: small-file compaction.
 
-Parquet keeps min/max statistics per row group; a reader's predicate
-prunes any row group whose [min, max] range excludes the probe value.
-That pruning is only effective if the writer CLUSTERED the data on the
-filter column — on a randomly-ordered table every row group spans the
-whole key domain and nothing prunes. ``write_sorted`` produces the
-clustered layout: range-repartition on the sort key (so each output
-file owns a disjoint key range) then sort within partitions (so row
-groups inside each file are tight sub-ranges).
-
-At 100 TB this is the difference between a point-lookup reading one
-row group and reading the whole table; it is the same idea that table
-formats surface as clustering/ordered writes, done with two built-in
-Spark transformations.
+Streaming sinks and per-day incremental loads accrete small files, and
+at scale the file COUNT (driver listing, task scheduling, open-per-file
+overhead) becomes the bottleneck long before bytes do.
+``compact_parquet`` rewrites an unpartitioned parquet directory into
+files of a target size.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-
-def write_sorted(
-    df: DataFrame,
-    path: str,
-    sort_cols: list[str],
-    *,
-    n_files: int | None = None,
-    partition_by: list[str] | None = None,
-    parquet_block_bytes: int | None = None,
-) -> None:
-    """Write ``df`` as parquet clustered on ``sort_cols``.
-
-    ``repartitionByRange`` gives disjoint per-file key ranges (one
-    range shuffle — sampled bounds, so skew in the sort key spreads);
-    ``sortWithinPartitions`` orders rows inside each file so row-group
-    min/max stats become tight. ``parquet_block_bytes`` caps row-group
-    size (smaller groups = finer pruning granularity at slightly more
-    footer overhead).
-    """
-    n = n_files or df.sparkSession.sparkContext.defaultParallelism
-    out = df.repartitionByRange(n, *sort_cols).sortWithinPartitions(*sort_cols)
-    writer = out.write.mode("overwrite")
-    if parquet_block_bytes is not None:
-        writer = writer.option("parquet.block.size", str(parquet_block_bytes))
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+import glob
+import math
+import os
 
 
 def compact_parquet(
@@ -54,20 +19,13 @@ def compact_parquet(
     path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
 ) -> tuple[int, int]:
-    """Small-file compaction: rewrite ``path`` into files of roughly
-    ``target_file_bytes``; returns (files_before, files_after).
+    """Rewrite ``path`` into files of roughly ``target_file_bytes``;
+    returns (files_before, files_after).
 
-    Streaming sinks and per-day incremental loads accrete small files;
-    at scale the file COUNT becomes the bottleneck (driver listing,
-    task scheduling, open-per-file overhead) long before bytes do.
     Compaction = read, coalesce to ceil(bytes/target) partitions
     (coalesce, not repartition — no shuffle, files just concatenate),
     staged-snapshot swap (same pattern as ``operators.merge``).
     """
-    import glob
-    import math
-    import os
-
     from ..operators.merge import _swap_in
 
     if any(
@@ -84,142 +42,3 @@ def compact_parquet(
     df = spark.read.parquet(path)
     _swap_in(spark, df.coalesce(n_after), path)
     return len(files), len(glob.glob(f"{path}/**/*.parquet", recursive=True))
-
-
-def zorder_key(cols: list[Column | str], bits: int = 8) -> Column:
-    """Morton (Z-order) interleave of ``cols``: quantize each column to
-    ``bits`` bits, then interleave the bits so proximity in ANY input
-    column keeps values near each other in the one sort key.
-
-    Why: ``write_sorted`` clusters perfectly on its FIRST column and
-    not at all on the second (lexicographic order); a table probed by
-    either of two keys needs both clustered. Z-ordering trades a
-    little per-column tightness for row-group stats that prune on
-    every interleaved column — the same layout lever table formats
-    expose as OPTIMIZE ZORDER, built here from shift/mask expressions
-    that stay inside whole-stage codegen.
-
-    Quantization here is linear min-max scaling (the min/max pairs are
-    computed by the caller or — in ``write_zordered`` — by one cheap
-    aggregate). Linear binning is exact for roughly-uniform keys (ids,
-    timestamps); for heavily skewed keys substitute quantile
-    boundaries from ``approxQuantile`` — the interleave below is
-    unchanged, only the bucket index changes.
-    """
-    quantized = []
-    for c in cols:
-        col = F.col(c) if isinstance(c, str) else c
-        quantized.append(col.cast("bigint"))
-    z = F.lit(0).cast("bigint")
-    n = len(quantized)
-    for bit in range(bits):
-        for j, q in enumerate(quantized):
-            # bit `bit` of column j lands at interleaved position
-            # bit*n + j (LSB-first round-robin)
-            z = z.bitwiseOR(
-                F.shiftleft(
-                    F.shiftright(q, bit).bitwiseAND(F.lit(1)), bit * n + j
-                )
-            )
-    return z
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    zorder_cols: list[str],
-    *,
-    bits: int = 8,
-    n_files: int | None = None,
-    parquet_block_bytes: int | None = None,
-) -> None:
-    """Write ``df`` as parquet Z-ordered on ``zorder_cols``.
-
-    One aggregate computes each column's [min, max]; each column is
-    min-max scaled to ``bits`` bits; rows then range-partition + sort
-    on the interleaved key (same two-step clustering as
-    ``write_sorted``, different key). The scaling bounds come from one
-    O(1)-output jobs — at 100 TB that pass is a footer-statistics read
-    away from free, and it is the only extra cost over a plain sorted
-    write.
-    """
-    from pyspark.sql.types import DateType, NumericType, TimestampType
-
-    spark = df.sparkSession
-
-    def numeric(c: str) -> Column:
-        """Orderable column → double preserving order (dates/timestamps
-        via their epoch representation; strings have no meaningful
-        linear order for locality and are rejected)."""
-        dt = df.schema[c].dataType
-        if isinstance(dt, NumericType):
-            return F.col(c).cast("double")
-        if isinstance(dt, DateType):
-            return F.datediff(F.col(c), F.lit("1970-01-01")).cast("double")
-        if isinstance(dt, TimestampType):
-            return F.unix_micros(F.col(c)).cast("double")
-        raise ValueError(
-            f"write_zordered: column {c!r} has non-orderable-numeric type "
-            f"{dt.simpleString()}; z-order keys must be numeric, date, or "
-            "timestamp (a hashed string has no locality to preserve)"
-        )
-
-    bounds = df.agg(
-        *[F.min(numeric(c)).alias(f"mn_{c}") for c in zorder_cols],
-        *[F.max(numeric(c)).alias(f"mx_{c}") for c in zorder_cols],
-    ).first()
-    levels = (1 << bits) - 1
-    scaled = []
-    for c in zorder_cols:
-        mn, mx = bounds[f"mn_{c}"], bounds[f"mx_{c}"]
-        if mn is None or mx is None:  # empty or all-null column
-            mn, mx = 0.0, 0.0
-        span = (mx - mn) or 1.0
-        scaled.append(
-            F.floor((numeric(c) - F.lit(mn)) / F.lit(span) * levels)
-            .cast("bigint")
-        )
-    keyed = df.withColumn("__z", zorder_key(scaled, bits=bits))
-    n = n_files or spark.sparkContext.defaultParallelism
-    out = (
-        keyed.repartitionByRange(n, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-    )
-    writer = out.write.mode("overwrite")
-    if parquet_block_bytes is not None:
-        writer = writer.option("parquet.block.size", str(parquet_block_bytes))
-    writer.parquet(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    path: str,
-    table: str,
-    bucket_cols: list[str],
-    *,
-    n_buckets: int = 8,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Write ``df`` as a bucketed parquet table: rows hash-partition
-    into ``n_buckets`` files per write-partition by ``bucket_cols``,
-    each sorted on ``sort_cols`` (default: the bucket key).
-
-    Bucketing is the WRITE-side half of a shuffle: a join or
-    aggregation on the bucket key of two co-bucketed tables needs no
-    Exchange at read time — at 100 TB that converts every recurring
-    fact-fact join on the key into a zero-shuffle sort-merge
-    (pinned by test). The layout registers through the session
-    catalog (``saveAsTable`` with an explicit path → external table);
-    plain parquet readers still see ordinary files, but the bucket
-    metadata lives in the catalog — production pins it in a metastore
-    or a table format, same as Spark itself requires.
-    """
-    (
-        df.write.mode("overwrite")
-        .format("parquet")
-        .option("path", path)
-        .bucketBy(n_buckets, *bucket_cols)
-        .sortBy(*(sort_cols or bucket_cols))
-        .saveAsTable(table)
-    )

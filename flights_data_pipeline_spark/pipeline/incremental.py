@@ -164,7 +164,11 @@ def build_fact_partitioned(
     fact_path: str,
     fact: str = "fct_seat_occupied_daily",
 ) -> None:
-    """Full build of the date-partitioned fact (the backfill path)."""
+    """Full build of ``fact`` partitioned by ``flight_date_key``: the
+    starting state that ``refresh_fact`` then maintains day by day.
+
+    This is not the pipeline's backfill, which writes unpartitioned
+    facts through ``runner.run_transforms``."""
     TRANSFORMS[fact](spark, staging_dir).write.mode("overwrite").option(
         "partitionOverwriteMode", "static"
     ).partitionBy("flight_date_key").parquet(fact_path)
@@ -237,12 +241,3 @@ def refresh_fact(
     }
     _delete_partitions(spark, fact_path, affected - written)
     return len(affected)
-
-
-def refresh_seat_occupancy(
-    spark: SparkSession, staging_dir: str, fact_path: str, ds: str
-) -> int:
-    """Back-compat alias: partition refresh of fct_seat_occupied_daily."""
-    return refresh_fact(
-        spark, staging_dir, fact_path, ds, fact="fct_seat_occupied_daily"
-    )

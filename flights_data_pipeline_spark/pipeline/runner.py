@@ -87,17 +87,6 @@ def run_day(
         return [f.result() for f in futures]
 
 
-#: clustering keys per fact table (see ``io.layout.write_sorted``):
-#: the column a consumer most often filters/joins on, so row-group
-#: min/max stats prune point lookups and key-range scans.
-FACT_SORT_KEYS = {
-    "fct_booking_ticket": ["ticket_no"],
-    "fct_flight_activity": ["flight_id"],
-    "fct_boarding_pass": ["ticket_no"],
-    "fct_seat_occupied_daily": ["flight_date_key", "flight_id"],
-}
-
-
 def run_transforms(
     spark: SparkSession,
     staging_dir: str,
@@ -105,46 +94,14 @@ def run_transforms(
     *,
     retries: int = 0,
     on_failure: FailureCallback | None = None,
-    clustered: bool = False,
-    layout: str = "sorted",
 ) -> None:
-    """Materialize dims then facts in the reference's fixed order (O4).
-
-    With ``clustered=True`` fact tables are written through a
-    clustering layout so parquet row-group stats prune downstream
-    reads — the lever that matters once facts are the 100 TB side.
-    ``layout`` picks the clustering: ``"sorted"`` (``write_sorted``,
-    range-repartitioned + sorted on the fact's key list — perfect
-    pruning on the leading key), ``"zorder"`` (``write_zordered``,
-    Morton interleave — pruning on EVERY key of a multi-key fact; only
-    meaningful where ``FACT_SORT_KEYS`` lists 2+ keys, single-key
-    facts fall back to sorted), or ``"bucketed"`` (``write_bucketed``,
-    hash buckets on the leading key registered as catalog table
-    ``wh_<name>`` — co-bucketed facts join with NO exchange). Dims
-    stay plain (broadcast-sized; layout is irrelevant).
-    """
-    from ..io.layout import write_bucketed, write_sorted, write_zordered
-
-    if layout not in ("sorted", "zorder", "bucketed"):
-        raise ValueError(
-            f"unknown layout: {layout!r} (use 'sorted', 'zorder' or 'bucketed')"
-        )
+    """Materialize dims then facts in the reference's fixed order (O4),
+    each as a plain parquet overwrite of ``{warehouse_dir}/{name}``."""
 
     def step(name):
-        df = TRANSFORMS[name](spark, staging_dir)
-        keys = FACT_SORT_KEYS.get(name)
-        if clustered and keys:
-            if layout == "bucketed":
-                write_bucketed(
-                    df, f"{warehouse_dir}/{name}", f"wh_{name}", keys[:1],
-                    sort_cols=keys,
-                )
-            elif layout == "zorder" and len(keys) >= 2:
-                write_zordered(df, f"{warehouse_dir}/{name}", keys)
-            else:
-                write_sorted(df, f"{warehouse_dir}/{name}", keys)
-        else:
-            df.write.mode("overwrite").parquet(f"{warehouse_dir}/{name}")
+        TRANSFORMS[name](spark, staging_dir).write.mode("overwrite").parquet(
+            f"{warehouse_dir}/{name}"
+        )
 
     # O4 preserved as a BARRIER, not a total order: every transform
     # reads staging only and writes its own warehouse directory, so
@@ -154,10 +111,6 @@ def run_transforms(
     # executors with the next table's scan). The dims→facts barrier
     # keeps the reference's topological contract for any future
     # fact-reads-dim transform.
-    # the bucketed layout registers catalog tables (saveAsTable);
-    # catalog mutations are kept sequential — the parquet-path layouts
-    # write disjoint directories and fan out safely
-    sequential = clustered and layout == "bucketed"
     # loud tier-coverage guard (round-12 ADVICE): a future transform
     # named outside the dim_/fct_ prefixes must fail here, not be
     # silently skipped by the prefix filters below
@@ -167,10 +120,6 @@ def run_transforms(
         raise ValueError(f"transforms outside dim_/fct_ tiers: {missed}")
     for tier in ("dim_", "fct_"):
         names = [n for n in TRANSFORM_ORDER if n.startswith(tier)]
-        if sequential:
-            for n in names:
-                _with_retries(f"transform:{n}", lambda n=n: step(n), retries, on_failure)
-            continue
         with ThreadPoolExecutor(max_workers=max(1, len(names))) as pool:
             futures = [
                 pool.submit(

@@ -713,10 +713,11 @@ def zorder_interleave_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     The bounds row is a 1-row broadcast (scalar aggregates), never a
     driver collect.
     """
-    return _zorder_keyed(spark, sf_dir).orderBy("zvalue", "o_orderkey").limit(50)
+    keyed = _orders_with_zvalue(spark, sf_dir)
+    return keyed.orderBy("zvalue", "o_orderkey").limit(50)
 
 
-def _zorder_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _orders_with_zvalue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(o_orderkey, xk, yk, zvalue) for every order — shared by the
     registry query (top-50 pin) and the physical-layout test (writes
     range-partitioned files and measures per-file bounding boxes)."""

@@ -147,7 +147,7 @@ def get_persistent_spark(
     metastore (embedded Derby, stored under ``warehouse_dir``) instead
     of the default in-memory catalog.
 
-    Why it exists: bucketed layouts (``io/layout.write_bucketed``) are
+    Why it exists: bucketed tables (``bucketBy`` + ``saveAsTable``) are
     only zero-shuffle-joinable while the BUCKET SPEC is in a catalog —
     with the in-memory catalog that metadata dies with the session,
     so a nightly job would re-shuffle what last night's job carefully

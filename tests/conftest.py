@@ -22,8 +22,6 @@ SLOW_TESTS = {
     "test_checksum.py::test_null_and_delimiter_rows_do_not_collide",
     "test_cli.py::test_curate_command",
     "test_cli.py::test_run_command_end_to_end",
-    "test_clustered_facts.py::test_clustered_facts_equal_plain",
-    "test_clustered_facts.py::test_zorder_layout_equals_plain",
     "test_incremental_fact.py::test_daywise_refresh_equals_full_rebuild",
     "test_incremental_fact.py::test_daywise_refresh_equals_full_rebuild_all_facts",
     "test_incremental_fact.py::test_refresh_is_idempotent",
@@ -33,7 +31,6 @@ SLOW_TESTS = {
     "test_neardup_ingest_stream.py::test_full_replay_converges",
     "test_operators.py::test_multiblock_semantic_dedup_improves_boundary_recall",
     "test_persistent_catalog.py::test_bucket_spec_survives_process_restart",
-    "test_physical_layout.py::test_pipeline_bucketed_layout_joins_without_exchange",
     "test_pysource.py::test_sink_stream_writer_one_manifest_per_batch",
     "test_pysource.py::test_sink_time_travel_up_to_batch",
     "test_span_trim_ingest_stream.py::test_drained_plan_equals_batch_twin",

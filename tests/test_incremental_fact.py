@@ -22,7 +22,6 @@ from flights_data_pipeline_spark.pipeline.incremental import (
     affected_flight_dates,
     build_fact_partitioned,
     refresh_fact,
-    refresh_seat_occupancy,
 )
 from flights_data_pipeline_spark.pipeline.runner import run_day
 
@@ -63,7 +62,7 @@ def test_daywise_refresh_equals_full_rebuild(spark, staged):
     full, incr = f"{staged}/fact_full", f"{staged}/fact_incr"
     build_fact_partitioned(spark, stg, full)
     for ds in DAYS:
-        refresh_seat_occupancy(spark, stg, incr, ds)
+        refresh_fact(spark, stg, incr, ds, fact="fct_seat_occupied_daily")
     assert _snapshot(spark, incr) == _snapshot(spark, full)
 
 
@@ -90,7 +89,7 @@ def test_refresh_rewrites_only_affected_partitions(spark, staged):
         f"flight_date_key={r['flight_date_key'].isoformat()}"
         for r in affected_flight_dates(spark, stg, ds).collect()
     }
-    n = refresh_seat_occupancy(spark, stg, fact, ds)
+    n = refresh_fact(spark, stg, fact, ds, fact="fct_seat_occupied_daily")
     assert n == len(affected) > 0
     after = mtimes()
     rewritten = {k for k in after if after[k] != before.get(k)}
@@ -214,9 +213,9 @@ def test_refresh_is_idempotent(spark, staged):
     stg = f"{staged}/staging"
     fact = f"{staged}/fact_idem"
     for ds in DAYS:
-        refresh_seat_occupancy(spark, stg, fact, ds)
+        refresh_fact(spark, stg, fact, ds, fact="fct_seat_occupied_daily")
     before = _snapshot(spark, fact)
-    refresh_seat_occupancy(spark, stg, fact, DAYS[3])
+    refresh_fact(spark, stg, fact, DAYS[3], fact="fct_seat_occupied_daily")
     assert _snapshot(spark, fact) == before
 
 

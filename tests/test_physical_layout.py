@@ -122,57 +122,6 @@ def test_pricing_summary_pushes_filter_and_prunes_columns(spark, sf_dir):
     assert schema and "l_orderkey" not in schema[0], schema  # pruned
 
 
-def test_sorted_write_enables_row_group_skipping(spark, tmp_path_factory):
-    """Clustered writes make parquet min/max stats selective: after
-    ``write_sorted`` on user_id, a point lookup's candidate row groups
-    (those whose [min,max] contains the key) drop from ~all to a
-    handful. This is write-side data skipping — the layout lever, as
-    distinct from partition pruning (directory-level) and pushdown."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from flights_data_pipeline_spark.io.catalog import load_table
-    from flights_data_pipeline_spark.io.layout import write_sorted
-
-    d = str(tmp_path_factory.mktemp("layout"))
-    ev = load_table(
-        spark, "/root/testdata/sf0.01", "events"
-    ).select("event_id", "ts", "user_id", "event_type", "value")
-
-    def candidate_row_groups(base: str, key: int) -> tuple[int, int]:
-        total = hit = 0
-        for f in glob.glob(f"{base}/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            for g in range(md.num_row_groups):
-                total += 1
-                for c in range(md.num_columns):
-                    col = md.row_group(g).column(c)
-                    if col.path_in_schema == "user_id":
-                        st = col.statistics
-                        if st.min <= key <= st.max:
-                            hit += 1
-        return hit, total
-
-    # random layout: small row groups, no ordering
-    ev.repartition(4).write.mode("overwrite").option(
-        "parquet.block.size", "65536"
-    ).parquet(f"{d}/random")
-    # clustered layout: same row-group size, range+sorted on user_id
-    write_sorted(
-        ev, f"{d}/sorted", ["user_id"], n_files=4, parquet_block_bytes=65536
-    )
-
-    probe = 42
-    hit_r, total_r = candidate_row_groups(f"{d}/random", probe)
-    hit_s, total_s = candidate_row_groups(f"{d}/sorted", probe)
-    assert total_r > 4 and total_s > 4  # multiple row groups exist
-    assert hit_r == total_r  # random layout: every group is a candidate
-    assert hit_s < total_s / 2, (hit_s, total_s)  # clustered: most skip
-    # and the data survives intact
-    assert spark.read.parquet(f"{d}/sorted").count() == ev.count()
-
-
 def test_aqe_splits_skewed_join_partition(spark, tmp_path_factory):
     """The AQE skew-join lever actually engages: a sort-merge join with
     one hot key gets its skewed partition split at runtime (the
@@ -314,84 +263,6 @@ def test_dormant_rich_plans_anti_join(spark, sf_dir):
     assert "LeftAnti" in plan, plan
 
 
-def test_zorder_write_prunes_on_both_columns(spark, tmp_path_factory):
-    """Z-ordered layout: row-group min/max stats prune point probes on
-    EITHER interleaved column; a lexicographic sort only prunes its
-    leading column. Both layouts hold identical rows."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from flights_data_pipeline_spark.io.layout import write_sorted, write_zordered
-
-    d = str(tmp_path_factory.mktemp("zorder"))
-    # two independent uniform keys — the adversarial case for
-    # lexicographic clustering
-    df = spark.range(80_000).selectExpr(
-        "id", "id % 283 AS ka", "CAST((id * 2654435761) % 293 AS BIGINT) AS kb"
-    )
-    write_sorted(df, f"{d}/lex", ["ka", "kb"], n_files=4, parquet_block_bytes=65536)
-    write_zordered(
-        df, f"{d}/z", ["ka", "kb"], bits=8, n_files=4, parquet_block_bytes=65536
-    )
-
-    def hit_fraction(base: str, col: str, key: int) -> float:
-        total = hit = 0
-        for f in glob.glob(f"{base}/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            for g in range(md.num_row_groups):
-                total += 1
-                for c in range(md.num_columns):
-                    s = md.row_group(g).column(c)
-                    if s.path_in_schema == col:
-                        st = s.statistics
-                        if st.min <= key <= st.max:
-                            hit += 1
-        assert total > 8, f"need multiple row groups, got {total}"
-        return hit / total
-
-    # leading column: both layouts prune hard
-    assert hit_fraction(f"{d}/lex", "ka", 7) < 0.35
-    assert hit_fraction(f"{d}/z", "ka", 7) < 0.6
-    # second column: lexicographic cannot prune, z-order must
-    lex_kb = hit_fraction(f"{d}/lex", "kb", 7)
-    z_kb = hit_fraction(f"{d}/z", "kb", 7)
-    assert lex_kb > 0.9, lex_kb
-    assert z_kb < 0.6, z_kb
-    # content identical
-    from collections import Counter
-
-    a = Counter(map(tuple, spark.read.parquet(f"{d}/lex").collect()))
-    b = Counter(map(tuple, spark.read.parquet(f"{d}/z").collect()))
-    assert a == b
-
-
-def test_zorder_key_matches_reference_interleave(spark):
-    """zorder_key's shift/mask expression equals the reference Python
-    Morton interleave, and is injective over the quantized domain."""
-    from flights_data_pipeline_spark.io.layout import zorder_key
-
-    def ref_z(a: int, b: int, bits: int = 8) -> int:
-        z = 0
-        for bit in range(bits):
-            z |= ((a >> bit) & 1) << (bit * 2)
-            z |= ((b >> bit) & 1) << (bit * 2 + 1)
-        return z
-
-    df = spark.range(256 * 4).selectExpr(
-        "CAST(id % 256 AS BIGINT) AS a", "CAST((id * 37) % 256 AS BIGINT) AS b"
-    )
-    got = df.select(
-        "a", "b", zorder_key(["a", "b"], bits=8).alias("z")
-    ).collect()
-    zs = set()
-    for r in got:
-        assert r.z == ref_z(r.a, r.b), (r.a, r.b, r.z)
-        zs.add((r.a, r.b, r.z))
-    # injective: distinct (a, b) → distinct z
-    assert len({z for _, _, z in zs}) == len({(a, b) for a, b, _ in zs})
-
-
 def test_events_window_pushes_timestamp_bounds(spark):
     """load_events_window on TIMESTAMP(MICROS) data (current testdata
     generation): both window bounds reach the parquet scan as pushed
@@ -408,38 +279,6 @@ def test_events_window_pushes_timestamp_bounds(spark):
     assert "GreaterThanOrEqual(ts" in pushed[0], pushed[0]
     assert "LessThanOrEqual(ts" in pushed[0], pushed[0]
     assert df.count() > 0
-
-
-def test_pipeline_bucketed_layout_joins_without_exchange(spark, tmp_path_factory):
-    """run_transforms(layout='bucketed') writes co-bucketed facts:
-    the recurring fact-fact join on ticket_no plans as sort-merge with
-    ZERO Exchange, and the bucketed content equals the plain write."""
-    from flights_data_pipeline_spark.pipeline import fixtures
-    from flights_data_pipeline_spark.pipeline.runner import run_day, run_transforms
-
-    base = tmp_path_factory.mktemp("bucketed_wh")
-    src, land, stg = str(base / "src"), str(base / "land"), str(base / "stg")
-    wh = str(base / "wh")
-    fixtures.write_source(spark, src, seed=7, n_bookings=150)
-    for ds in [d.isoformat() for d in fixtures.DAYS]:
-        run_day(spark, src, land, stg, ds)
-    run_transforms(spark, stg, wh, clustered=True, layout="bucketed")
-
-    bp = spark.table("wh_fct_boarding_pass")
-    bt = spark.table("wh_fct_booking_ticket")
-    joined = bp.select("ticket_no", "boarding_no").join(
-        bt.select("ticket_no", "amount").hint("merge"), "ticket_no"
-    )
-    plan = _explain(spark, joined)
-    assert "SortMergeJoin" in plan
-    assert "Exchange" not in plan, plan
-    # bucketed tables hold the same rows as the path-based parquet
-    plain_bp = spark.read.parquet(f"{wh}/fct_boarding_pass")
-    assert bp.count() == plain_bp.count()
-    assert joined.count() == plain_bp.select("ticket_no", "boarding_no").join(
-        spark.read.parquet(f"{wh}/fct_booking_ticket").select("ticket_no", "amount"),
-        "ticket_no",
-    ).count()
 
 
 def test_dynamic_partition_pruning_on_date_partitioned_fact(spark, tmp_path_factory):
@@ -661,9 +500,11 @@ def test_zorder_layout_bounds_both_dimensions(spark, sf_dir, tmp_path_factory):
     sort only bounds its own column — the data-skipping win z-order
     layout exists for. Measured on real written parquet: per-file
     (min, max) spans, exactly what footer-based min/max pruning sees."""
-    from flights_data_pipeline_spark.queries.io_functions import _zorder_keyed
+    from flights_data_pipeline_spark.queries.io_functions import (
+        _orders_with_zvalue,
+    )
 
-    keyed = _zorder_keyed(spark, sf_dir)
+    keyed = _orders_with_zvalue(spark, sf_dir)
 
     n_files = 16
     zdir = str(tmp_path_factory.mktemp("zorder"))
